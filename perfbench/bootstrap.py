@@ -1,6 +1,7 @@
-"""``bootstrap``: closed loop, one ``CDCEngine.start(enable_snapshot=True)``
-per iteration over a generated snapshot plus a seeded change history of
-``orders`` (single-column key) and ``lineitem`` (composite key).
+"""The bootstrap of the ``replicate`` workload: closed loop, one
+``CDCEngine.start(enable_snapshot=True)`` per iteration over a generated
+snapshot plus a seeded change history of ``orders`` (single-column key)
+and ``lineitem`` (composite key).
 
 The history is Zipf-skewed over the keys, update-heavy, and carries
 deletes and duplicate deliveries. Both phases apply through
@@ -21,24 +22,14 @@ import numpy as np
 
 from perfbench import harness, tables
 
+# sources and stand-ins: perfbench/METRICS.md, "Workload parameters"
 ORDERS_SNAPSHOT = 20_000
-LINES_PER_ORDER = 4  # lineitem snapshot = 80k rows
+LINES_PER_ORDER = 4  # TPC-H's mean lines per order; lineitem snapshot = 80k rows
 HISTORY_EVENTS = 150_000
+ORDERS_SHARE = 0.4  # of history events; the rest change lineitem
 NEW_KEY_SHARE = 0.2  # keys beyond the snapshot, first seen as inserts
-ZIPF_S = 0.8
-DELETE_SHARE = 0.08
-DUPLICATE_SHARE = 0.03
+DUPLICATE_EVERY = 33  # every 33rd position twice, as the repo's change-feed fixture
 MIN_ITERATIONS = 2  # the reported time is a median
-
-
-def _zipf_keys(rng, n_keys: int, size: int) -> np.ndarray:
-    """Zipf(ZIPF_S) draws over ``n_keys`` keys; rank r goes to a
-    seeded random key so hot keys spread over the key range."""
-    w = 1.0 / np.arange(1, n_keys + 1) ** ZIPF_S
-    cdf = np.cumsum(w)
-    cdf /= cdf[-1]
-    ranks = np.searchsorted(cdf, rng.random(size), side="right")
-    return rng.permutation(n_keys)[np.minimum(ranks, n_keys - 1)]
 
 
 # numeric draws per column; ``_SQL`` turns codes into the column values
@@ -118,22 +109,21 @@ def generate(out: str, seed: int) -> dict:
         con.unregister("d")
 
     n_events = HISTORY_EVENTS
-    is_orders = rng.random(n_events) < 0.4
-    dup_every = int(round(1 / DUPLICATE_SHARE))
+    is_orders = rng.random(n_events) < ORDERS_SHARE
     parts = []
     # global positions 1..n in history order; each table gets its slots
     for t, mask in (("orders", is_orders), ("lineitem", ~is_orders)):
         pos = np.flatnonzero(mask) + 1
         n = len(pos)
         n_keys = int(snap_keys[t] * (1 + NEW_KEY_SHARE))
-        k = _zipf_keys(rng, n_keys, n)
+        k = tables.zipf_keys(rng, n_keys, n)
         # first sighting of a key beyond the snapshot is its insert
         first = np.zeros(n, dtype=bool)
         first[np.unique(k, return_index=True)[1]] = True
-        op = np.where(rng.random(n) < DELETE_SHARE, 2, 1)
+        op = np.where(rng.random(n) < tables.DELETE_SHARE, 2, 1)
         op = np.where(first & (k >= snap_keys[t]), 0, op)
         # duplicate deliveries: the same record (same position) twice
-        rep = np.where(pos % dup_every == 0, 2, 1)
+        rep = np.where(pos % DUPLICATE_EVERY == 0, 2, 1)
         cols = {"k": k, "pos": pos, "opc": op, **_DRAWS[t](rng, n)}
         con.register(f"d_{t}", pa.table({c: np.repeat(v, rep) for c, v in cols.items()}))
         cols = tables.columns(t)
@@ -215,7 +205,7 @@ class Bootstrap:
         typed = envelope_to_typed(df, table, _struct(table), image="auto")
         return typed.select("op", "pos_file", "pos_offset", *tables.columns(table))
 
-    def _apply(self, df, connect, phase: str) -> None:
+    def _apply(self, df, shard_dir: str, stats_dir: str | None, phase: str) -> None:
         from pyspark.sql import functions as F
 
         from xxt_cdc_spark.sinks.upsert import apply_batch
@@ -234,10 +224,10 @@ class Bootstrap:
                 t0 = time.perf_counter()
                 res = apply_batch(
                     part,
-                    tables.WriterFactory(t, connect),
+                    tables.WriterFactory(t, tables.ShardConnect(shard_dir, t, self.ctx.spark_threads, stats_dir)),
                     tables.KEYS[t],
                     ["pos_file", "pos_offset"],
-                    num_partitions=self.ctx.threads,
+                    num_partitions=self.ctx.spark_threads,
                     arrow=True,
                 )
                 self.apply_s += time.perf_counter() - t0
@@ -256,9 +246,8 @@ class Bootstrap:
         from xxt_cdc_spark.engine import CDCEngine
 
         os.makedirs(shard_dir)
-        for path in tables.shard_paths(shard_dir, self.ctx.threads):
+        for path in tables.shard_paths(shard_dir, self.ctx.spark_threads):
             tables.create_target(path, ["orders", "lineitem"])
-        connect = tables.ShardConnect(shard_dir, shards=self.ctx.threads, stats_dir=stats_dir)
         spark, inputs, tracer = self.spark, self.inputs, self.tracer
         # the snapshot is taken at position 0; the master has reached the
         # end of the history by the time it completes
@@ -286,7 +275,7 @@ class Bootstrap:
         phase = {"name": "snapshot"}
 
         def apply_fn(df):
-            self._apply(df, connect, phase["name"])
+            self._apply(df, shard_dir, stats_dir, phase["name"])
             phase["name"] = "catchup"
 
         engine = CDCEngine(
@@ -328,17 +317,17 @@ def generate_inputs(ctx: harness.Context) -> tuple[str, dict]:
     return inputs, generate(inputs, ctx.seed)
 
 
-def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harness.Outcome:
-    import duckdb
-
+def measure(ctx: harness.Context, spark, prepared) -> dict:
+    """A warm-up iteration, then the measured ones. Returns what
+    ``finish`` checks and reports."""
     inputs, meta = prepared
     # warm-up: one full iteration, not measured (JIT, Python workers);
-    # a smaller warm-up left the first measured iteration ~40 % slow
+    # a first iteration costs ~11 s whatever its size (METRICS.md)
     off = harness.Tracer(spark, enabled=False)
     Bootstrap(ctx, spark, inputs, meta, off).iteration(
         os.path.join(ctx.work, "warm_shards"), os.path.join(ctx.work, "warm_ckpt"), None
     )
-    harness.log("warm-up done")
+    harness.log("bootstrap warm-up done")
     runs, shard_dirs, apply_failures = [], [], 0
     traced = None
     # trace mode: one untraced iteration, then one traced iteration;
@@ -362,40 +351,44 @@ def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harne
         else:
             runs.append(r)
         i += 1
-    rss.stop()
-    harness.log("measured")
+    harness.log("bootstrap measured")
+    return {"inputs": inputs, "meta": meta, "runs": runs, "shard_dirs": shard_dirs,
+            "apply_failures": apply_failures, "traced": traced}
 
-    # correctness, outside the measured region: every iteration's shards
-    # against the LWW state of the inputs computed in DuckDB
+
+def finish(ctx: harness.Context, m: dict) -> harness.Outcome:
+    """Correctness, outside the measured region (every iteration's
+    shards against the LWW state of the inputs computed in DuckDB), and
+    the metrics."""
+    import duckdb
+
+    meta = m["meta"]
     con = duckdb.connect()
     con.execute(f"SET threads TO {ctx.threads}")
-    expected = expected_state(con, inputs)
-    failed, detail = apply_failures, []
-    for d in shard_dirs:
+    expected = expected_state(con, m["inputs"])
+    failed, detail = m["apply_failures"], []
+    for d in m["shard_dirs"]:
         bad, det = check_target(con, d, expected)
         failed += bad
         detail.append(det)
         shutil.rmtree(d, ignore_errors=True)
     con.close()
-    harness.log("checked")
-    attempted = len(shard_dirs) * (meta["snapshot_rows"] + meta["history_events"])
+    attempted = len(m["shard_dirs"]) * (meta["snapshot_rows"] + meta["history_events"])
 
+    runs = m["runs"]
     walls = [r["wall_s"] for r in runs]
     rates = [r["events_per_s"] for r in runs]
     out = harness.Outcome(attempted=attempted, failed=failed)
-    out.e2e = {
-        "completion_p50_ms": statistics.median(walls) * 1000.0,
-        "throughput_per_s": statistics.median(rates),
-    }
+    out.e2e = {"throughput_per_s": (meta["snapshot_rows"] + meta["history_events"]) / statistics.median(walls)}
     out.report = {
         "bootstrap_s": {"value": statistics.median(walls), "unit": "s", "n": len(walls)},
         "catchup_events_per_s": {"value": statistics.median(rates), "unit": "1/s", "n": len(rates)},
-        "inputs": meta,
-        "iterations": runs,
-        "check": detail,
+        "bootstrap_inputs": meta,
+        "bootstrap_iterations": runs,
+        "bootstrap_check": detail,
     }
-    if traced:
-        b, r, stats_dir, tracer = traced
+    if m["traced"]:
+        b, r, stats_dir, tracer = m["traced"]
         out.layer = bootstrap_layers(b, r, stats_dir, tracer)
         out.layer["trace.overhead_pct"] = (r["wall_s"] / walls[0] - 1.0) * 100.0
         tracer.dump(os.path.join(harness.BUILD_DIR, "traces", f"bootstrap-{tracer.run_id}.json"))
@@ -413,7 +406,6 @@ def bootstrap_layers(b: Bootstrap, r: dict, stats_dir: str, tracer: harness.Trac
         "operators.collapse_out_rows": b.collapse_out,
         "operators.shuffle_write_bytes": st["shuffle_write_bytes"],
         "operators.spill_bytes": st["spill_bytes"],
-        "operators.filtered_events": 0,
         "sinks.apply_s": b.apply_s,
         "sinks.busy_s": conn["busy_s"],
         "sinks.statements": conn["statements"],

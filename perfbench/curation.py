@@ -75,17 +75,18 @@ def prepare(sf_dir: str):
 
 
 def one_pass(spark, sf_dir: str, queries: dict, tracer: harness.Tracer) -> tuple[dict, dict, dict]:
-    """Run every query once: materialize it to the noop sink (timed),
-    then read its rows back from the cache that materialization filled
-    and fingerprint them (not timed). Returns per-query seconds,
-    fingerprints and span ids."""
+    """Run every query once: build it (some queries run jobs while they
+    are built) and materialize it to the noop sink (timed), then read its
+    rows back from the cache that materialization filled and fingerprint
+    them (not timed). Returns per-query seconds, fingerprints and span
+    ids."""
     from xxt_cdc_spark.oracle import frame_fingerprint
 
     per, fps, spans = {}, {}, {}
     for name in QUERIES:
-        df = queries[name](spark, sf_dir).cache()
         with tracer.span(f"queries:{name}") as sp:
             t0 = time.perf_counter()
+            df = queries[name](spark, sf_dir).cache()
             df.write.mode("overwrite").format("noop").save()
             per[name] = time.perf_counter() - t0
         fps[name] = list(frame_fingerprint(df.toPandas()))

@@ -23,6 +23,8 @@ BENCHMARK_JSON = os.path.join(ROOT, "BENCHMARK.json")
 # everything the benchmark builds or writes lives under the checkout
 BUILD_DIR = os.path.join(ROOT, ".bench_build", "perfbench")
 SETUP_REPEATS = 3
+RSS_INTERVAL_S = 0.2
+TAIL_BEYOND = 10  # samples a reported tail percentile must have beyond it
 
 
 def cpu_count() -> int:
@@ -44,7 +46,8 @@ class Context:
     seed: int
     seconds: float
     trace: bool
-    threads: int
+    threads: int  # N = nproc
+    spark_threads: int  # the session's local[...] and shuffle partitions
     work: str
 
 
@@ -86,8 +89,11 @@ def get_session(threads: int):
 def timed_setup(spark, threads: int, prepare) -> tuple[object, list[float], list[float]]:
     """Stop and rebuild the session ``SETUP_REPEATS`` times, each time
     running one trivial job and the workload's ``prepare(spark)``.
-    Returns the last session, the wall time of every repetition and
-    the session-start part of each."""
+    One unmeasured ``prepare(spark)`` on the current session comes
+    first, so that no repetition loads classes or modules for the first
+    time. Returns the last session, the wall time of every repetition
+    and the session-start part of each."""
+    prepare(spark)
     times, starts = [], []
     for _ in range(SETUP_REPEATS):
         spark.stop()
@@ -164,10 +170,9 @@ def tree_rss_kb(pid: int, skip: frozenset = frozenset()) -> int:
 
 class RssSampler:
     """Samples the driver's process tree (Python driver, JVM, Python
-    workers) every ``interval`` seconds and keeps the peak."""
+    workers) every ``RSS_INTERVAL_S`` seconds and keeps the peak."""
 
-    def __init__(self, interval: float = 0.2) -> None:
-        self.interval = interval
+    def __init__(self) -> None:
         self.peak_kb = 0
         self.skip: set[int] = set()  # e.g. the input generator process
         self._stop = threading.Event()
@@ -176,7 +181,7 @@ class RssSampler:
     def _loop(self) -> None:
         while not self._stop.is_set():
             self.peak_kb = max(self.peak_kb, tree_rss_kb(os.getpid(), frozenset(self.skip)))
-            self._stop.wait(self.interval)
+            self._stop.wait(RSS_INTERVAL_S)
 
     def start(self) -> None:
         self._thread.start()
@@ -193,8 +198,8 @@ class RssSampler:
 def summarize(values: list[float]) -> dict:
     """Median, p95, p99 and sample count, through the engine's own
     percentile helper (``obs.metrics.MetricsSnapshot``). ``tail`` names
-    the highest of p99/p95/p90/p75 that has at least ten samples beyond
-    it, or None when there are too few samples for any of them."""
+    the highest of p99/p95/p90/p75 that has at least ``TAIL_BEYOND``
+    samples beyond it, or None when there are too few samples for any of them."""
     from xxt_cdc_spark.obs.metrics import MetricsSnapshot
 
     pct = MetricsSnapshot(batch_durations_ms=list(values)).latency_percentiles()
@@ -207,9 +212,9 @@ def summarize(values: list[float]) -> dict:
     }
 
 
-def tail_percentile(n: int, beyond: int = 10) -> int | None:
+def tail_percentile(n: int) -> int | None:
     for p in (99, 95, 90, 75):
-        if n * (100 - p) / 100.0 >= beyond:
+        if n * (100 - p) / 100.0 >= TAIL_BEYOND:
             return p
     return None
 
@@ -225,10 +230,10 @@ class Tracer:
     records nothing and sets no job group.
     """
 
-    def __init__(self, spark, enabled: bool, run_id: str | None = None) -> None:
+    def __init__(self, spark, enabled: bool) -> None:
         self.spark = spark
         self.enabled = enabled
-        self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.run_id = uuid.uuid4().hex[:12]
         self.spans: list[dict] = []
         self._local = threading.local()
 

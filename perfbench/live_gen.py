@@ -1,10 +1,14 @@
-"""Open-loop binlog generator for the ``live_tail`` workload.
+"""Open-loop binlog generator for the live tail of the ``replicate`` workload.
 
-Runs in its own process. It draws every record from ``--seed`` first,
-waits for the file ``--go`` to appear, then fixes the schedule: tick
-``k`` is due at ``start + k * tick_ms``, with ``start`` a short lead
-after the go signal, and is written to ``--start-out`` at once. Each tick appends its records to the current
-``binlog.NNNNNN`` file, whatever the reader is doing. A late tick is
+Runs in its own process. It draws every record from ``--seed`` first
+and appends the first ``WARM_EVENTS`` of them to ``binlog.000001`` at
+once, as the warm-up segment the stream drains before the live run; it
+writes that segment's end offset to ``--ready-out``. It then waits for
+the file ``--go`` to appear and fixes the schedule: tick ``k`` is due
+at ``start + k * TICK_MS``, with ``start`` a short lead after the go
+signal, and is written to ``--start-out`` at once. Each tick appends
+its records to the current ``binlog.NNNNNN`` file (a new file every
+``ROTATE_EVERY`` ticks), whatever the reader is doing. A late tick is
 written as soon as possible and its lateness recorded; the schedule
 never shifts.
 
@@ -13,8 +17,7 @@ When it ends it writes one JSON line per tick to ``--ticks``:
 ``(file, end)`` is the binlog position just after the tick's records.
 
 Usage: python3 -m perfbench.live_gen --dir D --seed S --ticks N
-       --go FILE --start-out FILE --ticks-out FILE --rate EVENTS_PER_S
-       --tick-ms MS --rotate-every TICKS
+       --ready-out FILE --go FILE --start-out FILE --ticks-out FILE
 """
 
 from __future__ import annotations
@@ -27,10 +30,14 @@ import time
 
 import numpy as np
 
+from perfbench import tables
+
+RATE = 2_500  # events/s: well below the knee on a 4-core machine (METRICS.md)
+TICK_MS = 50
+ROTATE_EVERY = 60  # ticks per binlog file (3 s)
+WARM_EVENTS = RATE  # the warm-up segment ahead of the first tick: one second's events
 GTID_SOURCE = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
-KEYS = 100_000
-ZIPF_S = 0.8
-DELETE_SHARE = 0.05
+KEYS = 100_000  # stand-in: perfbench/METRICS.md, "Workload parameters"
 # FIXTURES F3: include ["orders", "lineitem.*"], exclude ["temp_.*", ".*_backup"]
 EXCLUDED_SHARE = 0.10
 EXCLUDED_TABLES = ("temp_orders", "orders_backup")
@@ -43,13 +50,10 @@ def records(seed: int, n: int) -> list[bytes]:
     from xxt_cdc_spark.streaming.binlog_source import encode_record
 
     rng = np.random.default_rng(seed)
-    w = 1.0 / np.arange(1, KEYS + 1) ** ZIPF_S
-    cdf = np.cumsum(w)
-    cdf /= cdf[-1]
-    keys = rng.permutation(KEYS)[np.minimum(np.searchsorted(cdf, rng.random(n), side="right"), KEYS - 1)]
+    keys = tables.zipf_keys(rng, KEYS, n)
     excluded = rng.random(n) < EXCLUDED_SHARE
     which = rng.integers(0, len(EXCLUDED_TABLES), n)
-    deletes = rng.random(n) < DELETE_SHARE
+    deletes = rng.random(n) < tables.DELETE_SHARE
     cust = rng.integers(0, 15_000, n)
     cents = rng.integers(100_000, 50_000_000, n)
     days = rng.integers(0, 2400, n)
@@ -91,24 +95,18 @@ def records(seed: int, n: int) -> list[bytes]:
 
 
 LEAD_S = 0.5
-
-
 GO_TIMEOUT_S = 120.0
 
 
-def run(directory: str, seed: int, go: str, start_out: str, n_ticks: int, tick_ms: float, rate: int,
-        rotate_every: int) -> list[dict]:
-    per_tick = int(rate * tick_ms / 1000)
-    lines = records(seed, per_tick * n_ticks)
-    deadline = time.time() + GO_TIMEOUT_S
-    while not os.path.exists(go):
-        if time.time() > deadline:
-            raise SystemExit("no go signal")
-        time.sleep(0.01)
-    start = time.time() + LEAD_S
-    with open(start_out + ".tmp", "w") as f:
-        f.write(repr(start))
-    os.replace(start_out + ".tmp", start_out)
+def _publish(path: str, value) -> None:
+    with open(path + ".tmp", "w") as f:
+        f.write(repr(value))
+    os.replace(path + ".tmp", path)
+
+
+def run(directory: str, seed: int, ready_out: str, go: str, start_out: str, n_ticks: int) -> list[dict]:
+    per_tick = RATE * TICK_MS // 1000
+    lines = records(seed, WARM_EVENTS + per_tick * n_ticks)
     os.makedirs(directory, exist_ok=True)
     file_no = 1
     name = f"binlog.{file_no:06d}"
@@ -116,12 +114,24 @@ def run(directory: str, seed: int, go: str, start_out: str, n_ticks: int, tick_m
     ticks = []
     parent = os.getppid()
     try:
+        fh.write(b"".join(lines[:WARM_EVENTS]))
+        fh.flush()
+        os.fsync(fh.fileno())
+        _publish(ready_out, fh.tell())
+        lines = lines[WARM_EVENTS:]
+        deadline = time.time() + GO_TIMEOUT_S
+        while not os.path.exists(go):
+            if time.time() > deadline:
+                raise SystemExit("no go signal")
+            time.sleep(0.01)
+        start = time.time() + LEAD_S
+        _publish(start_out, start)
         for k in range(n_ticks):
-            due = start + k * tick_ms / 1000.0
+            due = start + k * TICK_MS / 1000.0
             wait = due - time.time()
             if wait > 0:
                 time.sleep(wait)
-            if k and rotate_every and k % rotate_every == 0:
+            if k and k % ROTATE_EVERY == 0:
                 fh.close()
                 file_no += 1
                 name = f"binlog.{file_no:06d}"
@@ -150,15 +160,13 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", required=True)
     ap.add_argument("--seed", type=int, required=True)
+    ap.add_argument("--ready-out", required=True)
     ap.add_argument("--go", required=True)
     ap.add_argument("--start-out", required=True)
     ap.add_argument("--ticks", type=int, required=True)
     ap.add_argument("--ticks-out", required=True)
-    ap.add_argument("--rate", type=int, required=True)
-    ap.add_argument("--tick-ms", type=float, required=True)
-    ap.add_argument("--rotate-every", type=int, required=True)
     a = ap.parse_args(argv)
-    ticks = run(a.dir, a.seed, a.go, a.start_out, a.ticks, a.tick_ms, a.rate, a.rotate_every)
+    ticks = run(a.dir, a.seed, a.ready_out, a.go, a.start_out, a.ticks)
     with open(a.ticks_out, "w") as f:
         for t in ticks:
             f.write(json.dumps(t) + "\n")

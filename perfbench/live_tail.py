@@ -1,4 +1,4 @@
-"""``live_tail``: open loop. A generator process (``live_gen``) appends
+"""The live tail of the ``replicate`` workload: open loop. A generator process (``live_gen``) appends
 seeded single-row changes to rotated ``xxt_binlog`` files at a fixed
 rate in fixed ticks; about 10 % of them target tables the
 ``TableFilter`` excludes. The stream runs ``read_binlog_stream`` →
@@ -24,18 +24,15 @@ import sys
 import time
 
 from perfbench import harness, tables
+from perfbench.live_gen import EXCLUDE_TABLES, INCLUDE_TABLES, RATE, TICK_MS, WARM_EVENTS
 
-RATE = 2_500  # events/s: well below the knee on a 4-core machine (METRICS.md)
-TICK_MS = 50
 # each batch starts when the previous one ends: with batches longer than
 # a processingTime interval, Spark waits for the next interval boundary,
 # which at 250 ms made the run's latency flip between ~0.7 and ~1.6 s
 TRIGGER = "0 seconds"
-WARMUP_S = 2.0  # ticks due in the first WARMUP_S seconds are not measured
-ROTATE_EVERY = 60  # ticks per binlog file (3 s)
+WARMUP_S = 1.0  # ticks due in the first WARMUP_S seconds are not measured
 DRAIN_TIMEOUT_S = 30.0
 GEN_READY_TIMEOUT_S = 30.0
-WARM_EVENTS = 5_000  # pre-written log the same pipeline drains before the live run
 
 
 def _file_num(name: str) -> int:
@@ -149,33 +146,17 @@ class Sink:
 
 
 def generate_inputs(ctx: harness.Context):
-    """Nothing to pre-build: the generator process draws its records
-    from the seed when the stream is up."""
+    """Only the empty target: the generator process draws its records
+    from the seed when the run starts."""
     target = os.path.join(ctx.work, "target")
     os.makedirs(target)
     tables.create_target(os.path.join(target, "target.db"), ["orders"])
     return {"target": target, "binlog": os.path.join(ctx.work, "binlog")}
 
 
-def prepare(prepared):
-    """Program-side set-up repeated for ``setup_s``: register the binlog
-    source and build the filtered stream over an empty log."""
-    probe = os.path.join(os.path.dirname(prepared["binlog"]), "probe_binlog")
-
-    def _prepare(spark) -> None:
-        from xxt_cdc_spark.operators.table_filter import TableFilter
-        from xxt_cdc_spark.streaming.binlog_source import read_binlog_stream
-        from perfbench.live_gen import EXCLUDE_TABLES, INCLUDE_TABLES
-
-        os.makedirs(probe, exist_ok=True)
-        f = TableFilter(include_tables=INCLUDE_TABLES, exclude_tables=EXCLUDE_TABLES)
-        read_binlog_stream(spark, probe).filter(f.predicate())
-
-    return _prepare
-
-
-def _wait_start(path: str, gen: subprocess.Popen) -> float:
-    """The generator's tick-0 due time, once it has drawn its records."""
+def _wait_published(path: str, gen: subprocess.Popen) -> float:
+    """A value the generator publishes (the warm-up segment's end, the
+    tick-0 due time), once it is there."""
     deadline = time.time() + GEN_READY_TIMEOUT_S
     while not os.path.exists(path):
         if gen.poll() is not None or time.time() > deadline:
@@ -185,70 +166,61 @@ def _wait_start(path: str, gen: subprocess.Popen) -> float:
         return float(f.read())
 
 
-def threads_for(ctx: harness.Context) -> int:
-    """The generator takes one of the N threads; Spark gets the rest."""
-    return max(1, ctx.threads - 1)
+def _wait_applied(query, pos: tuple[int, int], timeout: float) -> bool:
+    """Wait until the stream's last batch ends at or past ``pos``."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        prog = query.lastProgress
+        end = _offset(json.loads(prog.json)["sources"][0]["endOffset"]) if prog is not None else None
+        if end and position(end["file"], end["pos"]) >= pos:
+            return True
+        time.sleep(0.05)
+    return False
 
 
-def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harness.Outcome:
+def measure(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> dict:
+    """Start the generator and the stream, drain the warm-up segment,
+    run the schedule and drain it. Returns what ``finish`` checks and
+    reports."""
     from xxt_cdc_spark.obs.metrics import snapshot_from_query
     from xxt_cdc_spark.operators.table_filter import TableFilter
     from xxt_cdc_spark.streaming.binlog_source import read_binlog_stream
     from xxt_cdc_spark.streaming.pipeline import CDCStreamPipeline
-    from perfbench.live_gen import EXCLUDE_TABLES, INCLUDE_TABLES, records
-
-    def pipeline(log: str, target: str, ckpt: str, tracer: harness.Tracer):
-        sink = Sink(spark, target, os.path.join(ctx.work, "connstats"), tracer)
-        pipe = CDCStreamPipeline(
-            spark=spark,
-            source=read_binlog_stream(spark, log),
-            apply_fn=sink,
-            checkpoint_dir=ckpt,
-            table_filter=TableFilter(include_tables=INCLUDE_TABLES, exclude_tables=EXCLUDE_TABLES),
-            trigger_interval=TRIGGER,
-        )
-        return sink, pipe
 
     n_ticks = int((WARMUP_S + ctx.seconds) * 1000 / TICK_MS)
     binlog = prepared["binlog"]
-    os.makedirs(binlog)
-    open(os.path.join(binlog, "binlog.000001"), "ab").close()
-    # the generator draws its records while the pipeline warms up, then
-    # waits for the go signal
     ticks_out = os.path.join(ctx.work, "ticks.jsonl")
+    ready_out = os.path.join(ctx.work, "ready.txt")
     go = os.path.join(ctx.work, "go")
     start_out = os.path.join(ctx.work, "start.txt")
     gen = subprocess.Popen(
         [
             sys.executable, "-m", "perfbench.live_gen",
-            "--dir", binlog, "--seed", str(ctx.seed), "--go", go, "--start-out", start_out,
-            "--ticks", str(n_ticks), "--ticks-out", ticks_out,
-            "--rate", str(RATE), "--tick-ms", str(TICK_MS), "--rotate-every", str(ROTATE_EVERY),
+            "--dir", binlog, "--seed", str(ctx.seed), "--ticks", str(n_ticks), "--ready-out", ready_out,
+            "--go", go, "--start-out", start_out, "--ticks-out", ticks_out,
         ],
         cwd=harness.ROOT,
     )
     rss.skip.add(gen.pid)
     try:
-        # warm-up: the same pipeline drains a pre-written log once (Python
-        # data source workers, JIT, sqlite), so the live run starts warm
-        warm = os.path.join(ctx.work, "warm")
-        os.makedirs(os.path.join(warm, "log"))
-        os.makedirs(os.path.join(warm, "target"))
-        tables.create_target(os.path.join(warm, "target", "target.db"), ["orders"])
-        with open(os.path.join(warm, "log", "binlog.000001"), "wb") as f:
-            f.write(b"".join(records(ctx.seed + 1_000_003, WARM_EVENTS)))
-        _, wpipe = pipeline(os.path.join(warm, "log"), os.path.join(warm, "target"), os.path.join(warm, "ckpt"),
-                            harness.Tracer(spark, enabled=False))
-        wq = wpipe.start(available_now=True)
-        wq.awaitTermination(60)
-        wq.stop()
-        harness.log("warm-up done")
-
+        warm_end = position("binlog.000001", _wait_published(ready_out, gen))
         tracer = harness.Tracer(spark, enabled=ctx.trace)
-        sink, pipe = pipeline(binlog, prepared["target"], os.path.join(ctx.work, "ckpt"), tracer)
-        query = pipe.start()
+        sink = Sink(spark, prepared["target"], os.path.join(ctx.work, "connstats"), tracer)
+        query = CDCStreamPipeline(
+            spark=spark,
+            source=read_binlog_stream(spark, binlog),
+            apply_fn=sink,
+            checkpoint_dir=os.path.join(ctx.work, "ckpt"),
+            table_filter=TableFilter(include_tables=INCLUDE_TABLES, exclude_tables=EXCLUDE_TABLES),
+            trigger_interval=TRIGGER,
+        ).start()
+        # warm-up: the stream drains the generator's warm-up segment
+        # (Python data source workers, JIT, sqlite) before the first tick
+        if not _wait_applied(query, warm_end, DRAIN_TIMEOUT_S):
+            raise RuntimeError("the stream did not drain the warm-up segment")
+        harness.log("tail warm-up done")
         open(go, "w").close()
-        start = _wait_start(start_out, gen)
+        start = _wait_published(start_out, gen)
         budget = start - time.time() + WARMUP_S + ctx.seconds + 30
         if ctx.trace:
             # first half untraced, second half traced: the difference is
@@ -267,22 +239,22 @@ def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harne
             gen.wait()
     with open(ticks_out) as f:
         ticks = [json.loads(line) for line in f]
-    final = position(ticks[-1]["file"], ticks[-1]["end"])
-
     # drain: wait until the stream has applied the last tick
-    deadline = time.time() + DRAIN_TIMEOUT_S
-    while time.time() < deadline:
-        prog = query.lastProgress
-        end = _offset(json.loads(prog.json)["sources"][0]["endOffset"]) if prog is not None else None
-        if end and position(end["file"], end["pos"]) >= final:
-            break
-        time.sleep(0.05)
+    _wait_applied(query, position(ticks[-1]["file"], ticks[-1]["end"]), DRAIN_TIMEOUT_S)
     query.stop()
-    progress = _progress(query)
-    obs_p50 = snapshot_from_query(query).latency_percentiles()["p50_ms"]
-    rss.stop()
+    harness.log("tail measured")
+    return {"prepared": prepared, "ticks": ticks, "start": start, "sink": sink, "tracer": tracer,
+            "progress": _progress(query),
+            "obs_p50": snapshot_from_query(query).latency_percentiles()["p50_ms"]}
 
+
+def finish(ctx: harness.Context, m: dict) -> harness.Outcome:
+    """Latency attribution, correctness (the target against the LWW
+    state of every generated event, computed in DuckDB from the binlog
+    files themselves) and the metrics."""
+    ticks, start, sink, tracer = m["ticks"], m["start"], m["sink"], m["tracer"]
     batches = []
+    progress = m["progress"]
     for p in progress:
         bid = p["batchId"]
         if bid not in sink.batches or not p.get("sources"):
@@ -307,18 +279,14 @@ def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harne
         t_first = min(t["due"] for a, t in zip(measured, measured_ticks) if a["batch_id"] in batch_ids)
         span = max(sink.batches[b]["done"] for b in batch_ids) - t_first
 
-    # correctness: the target against the LWW state of every generated
-    # event, computed in DuckDB from the binlog files themselves
-    failed, detail = check(ctx, binlog, prepared["target"])
+    failed, detail = check(ctx, m["prepared"]["binlog"], m["prepared"]["target"])
     unapplied = sum(t["events"] for a, t in zip(att, ticks) if a["batch_id"] is None)
     failed += unapplied + sum(b.get("failures", 0) for b in sink.batches.values())
-    attempted = sum(t["events"] for t in ticks)
+    attempted = WARM_EVENTS + sum(t["events"] for t in ticks)
 
+    applied_rate = events_applied / span if span > 0 else 0.0
     out = harness.Outcome(attempted=attempted, failed=failed)
-    out.e2e = {
-        "completion_p50_ms": lat["p50"],
-        "throughput_per_s": events_applied / span if span > 0 else 0.0,
-    }
+    out.e2e = {"completion_p50_ms": lat["p50"]}
     out.report = {
         "apply_latency_p50_ms": {"value": lat["p50"], "unit": "ms", "n": lat["n"], "batches": len(batch_ids)},
         "apply_latency_p95_ms": {
@@ -328,18 +296,18 @@ def run(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> harne
             "batches": len(batch_ids),
             "highest_percentile_with_10_ticks_beyond": lat["tail"],
         },
-        "applied_events_per_s": {"value": out.e2e["throughput_per_s"], "unit": "1/s", "n": events_applied},
+        "applied_events_per_s": {"value": applied_rate, "unit": "1/s", "n": events_applied},
         "offered_events_per_s": RATE,
         "warmup_s": WARMUP_S,
         "warmup_batches": warmup_batches,
         "unapplied_events": unapplied,
         "gen_late_ms_max": max(t["late_ms"] for t in ticks),
-        "check": detail,
-        "spark_threads": threads_for(ctx),
+        "tail_check": detail,
         "generator_threads": 1,
     }
     if ctx.trace:
-        out.layer = live_layers(sink, batches, att, ticks, start, tracer, lat_ms, obs_p50, os.path.join(ctx.work, "connstats"))
+        out.layer = live_layers(sink, batches, att, ticks, start, tracer, lat_ms, m["obs_p50"],
+                                os.path.join(ctx.work, "connstats"))
         tracer.dump(os.path.join(harness.BUILD_DIR, "traces", f"live_tail-{tracer.run_id}.json"))
     return out
 
@@ -404,19 +372,17 @@ def live_layers(sink, batches, att, ticks, start, tracer, lat_ms, obs_p50, stats
         out.update(
             {
                 "operators.filtered_events": rows_in - passed,
-                "operators.collapse_in_rows": passed,
-                "operators.collapse_out_rows": sum(b["upserts"] + b["deletes"] for b in traced),
-                "sinks.apply_s": sum(b["apply_s"] for b in traced),
-                "sinks.busy_s": conn["busy_s"],
-                "sinks.statements": conn["statements"],
-                "sinks.rows_per_statement": conn["rows"] / max(1, conn["statements"]),
-                "sinks.retries": sum(b["retries"] for b in traced),
-                "sinks.failures": sum(b["failures"] for b in traced),
-                "sinks.task_run_s": st["run_s"],
-                "operators.shuffle_write_bytes": st["shuffle_write_bytes"],
-                "operators.spill_bytes": st["spill_bytes"],
+                "operators.tail_collapse_in_rows": passed,
+                "operators.tail_collapse_out_rows": sum(b["upserts"] + b["deletes"] for b in traced),
+                "sinks.tail_apply_s": sum(b["apply_s"] for b in traced),
+                "sinks.tail_busy_s": conn["busy_s"],
+                "sinks.tail_statements": conn["statements"],
+                "sinks.tail_rows_per_statement": conn["rows"] / max(1, conn["statements"]),
+                "sinks.tail_retries": sum(b["retries"] for b in traced),
+                "sinks.tail_failures": sum(b["failures"] for b in traced),
+                "sinks.tail_task_run_s": st["run_s"],
             }
         )
         if traced_lat and untraced_p50:
-            out["trace.overhead_pct"] = (harness.summarize(traced_lat)["p50"] / untraced_p50 - 1.0) * 100.0
+            out["trace.tail_overhead_pct"] = (harness.summarize(traced_lat)["p50"] / untraced_p50 - 1.0) * 100.0
     return out

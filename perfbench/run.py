@@ -2,7 +2,7 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload bootstrap --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload replicate --seed 1 --seconds 10 --trace 0
 
 The last line of standard output is one JSON object with the keys
 ``correct``, ``attempted``, ``failed`` and ``metrics``: every end-to-end
@@ -25,7 +25,7 @@ import time
 from concurrent.futures import ProcessPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("bootstrap", "live_tail", "curation_batch")
+WORKLOADS = ("replicate", "curation_batch")
 # a hung run fails instead of blocking its caller past 180 s
 DEADLINE_S = 170
 
@@ -62,7 +62,14 @@ def main(argv: list[str] | None = None) -> int:
 
     from perfbench import harness
 
+    harness.log(f"{args.workload} seed {args.seed}")
+    if args.workload == "replicate":
+        from perfbench import replicate as wl
+    else:
+        from perfbench import curation as wl
+
     threads = harness.cpu_count()
+    session_threads = wl.threads_for(threads) if hasattr(wl, "threads_for") else threads
     work = os.path.join(harness.BUILD_DIR, f"{args.workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
@@ -72,16 +79,9 @@ def main(argv: list[str] | None = None) -> int:
         seconds=args.seconds,
         trace=bool(args.trace),
         threads=threads,
+        spark_threads=session_threads,
         work=work,
     )
-    if args.workload == "bootstrap":
-        from perfbench import bootstrap as wl
-    elif args.workload == "live_tail":
-        from perfbench import live_tail as wl
-    else:
-        from perfbench import curation as wl
-
-    session_threads = wl.threads_for(ctx) if hasattr(wl, "threads_for") else threads
     # the benchmark's own input generator runs in a child process while
     # the session starts, so neither its time nor its memory lands in
     # the measured process
@@ -108,6 +108,7 @@ def main(argv: list[str] | None = None) -> int:
         peak_mb = rss.stop()
         shutil.rmtree(work, ignore_errors=True)
     dog.cancel()
+    harness.log("stopped")
 
     report = {
         "workload": args.workload,
@@ -115,6 +116,7 @@ def main(argv: list[str] | None = None) -> int:
         "seconds": args.seconds,
         "trace": args.trace,
         **harness.versions_record(threads),
+        "spark_threads": session_threads,
         "generate_s": gen_s,
         "setup_s": {"value": statistics.median(setup), "unit": "s", "n": len(setup)},
         "peak_rss_mb": {"value": peak_mb, "unit": "MB", "n": 1},

@@ -12,6 +12,8 @@ import os
 import sqlite3
 import time
 
+import numpy as np
+
 # (column, DuckDB type, Spark type, sqlite type)
 ORDERS = [
     ("o_orderkey", "BIGINT", "long", "INTEGER"),
@@ -56,22 +58,40 @@ def create_target(path: str, tables: list[str]) -> None:
     con.close()
 
 
+# --- generated changes -----------------------------------------------------
+# YCSB's default Zipfian constant (ZipfianGenerator.ZIPFIAN_CONSTANT)
+ZIPF_S = 0.99
+DELETE_SHARE = 0.05  # stand-in: perfbench/METRICS.md, "Workload parameters"
+
+
+def zipf_keys(rng, n_keys: int, size: int):
+    """``size`` Zipf(ZIPF_S) draws over ``n_keys`` keys; rank r goes to a
+    seeded random key so hot keys spread over the key range."""
+    w = 1.0 / np.arange(1, n_keys + 1) ** ZIPF_S
+    cdf = np.cumsum(w)
+    cdf /= cdf[-1]
+    ranks = np.searchsorted(cdf, rng.random(size), side="right")
+    return rng.permutation(n_keys)[np.minimum(ranks, n_keys - 1)]
+
+
 # --- sink connections -------------------------------------------------------
 class ShardConnect:
     """``connect_fn`` for the sink. With ``shards`` the target is that
-    many sqlite files behind a key router (``ShardRouter``); otherwise
-    it is the one file ``target.db``. With ``stats_dir`` every
-    connection is wrapped in a timing proxy that appends its counters
-    to a file when it closes."""
+    many sqlite files behind ``ShardRouter`` for ``table``; otherwise it
+    is the one file ``target.db``. With ``stats_dir`` every connection
+    is wrapped in a timing proxy that appends its counters to a file
+    when it closes."""
 
-    def __init__(self, directory: str, shards: int = 0, stats_dir: str | None = None) -> None:
+    def __init__(self, directory: str, table: str | None = None, shards: int = 0,
+                 stats_dir: str | None = None) -> None:
         self.directory = directory
+        self.table = table
         self.shards = shards
         self.stats_dir = stats_dir
 
     def __call__(self):
         if self.shards:
-            conn = ShardRouter(self.directory, self.shards)
+            conn = ShardRouter(self.directory, self.table, self.shards)
         else:
             conn = sqlite3.connect(os.path.join(self.directory, "target.db"), timeout=60)
         if self.stats_dir is None:
@@ -83,17 +103,57 @@ def shard_paths(directory: str, shards: int) -> list[str]:
     return [os.path.join(directory, f"shard_{i}.db") for i in range(shards)]
 
 
-class ShardRouter:
-    """A DB-API connection over ``shards`` sqlite files, routing each
-    statement row by its first key column modulo ``shards`` (every
-    table here lists its key columns first, in both upsert and delete
-    parameters). It stands for a sharded target behind a key router:
-    the shard of a key never depends on which Spark partition applies
-    it. Each shard's slice of a statement commits on its own, so no
-    writer holds one shard's lock while waiting for another's."""
+# Spark's Murmur3Hash (org.apache.spark.unsafe.hash.Murmur3_x86_32) on
+# uint32 arrays: hashLong, hashInt, seed 42, each column seeding the next
+def _rotl(x, r: int):
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
 
-    def __init__(self, directory: str, shards: int) -> None:
+
+def _mix(h, k):
+    k = _rotl(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    return _rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+
+def _fmix(h, length: int):
+    h = h ^ np.uint32(length)
+    h = (h ^ (h >> np.uint32(16))) * np.uint32(0x85EBCA6B)
+    h = (h ^ (h >> np.uint32(13))) * np.uint32(0xC2B2AE35)
+    return h ^ (h >> np.uint32(16))
+
+
+def spark_partition(table: str, keys: list, shards: int):
+    """``pmod(hash(<key columns>), shards)`` of Spark, per row of key
+    tuples: the partition ``repartition(shards, *KEYS[table])`` sends
+    the row to."""
+    v = np.asarray(keys, dtype=np.int64).reshape(len(keys), -1)
+    types = {c: dt for c, dt, _, _ in TABLES[table]}
+    h = np.full(len(keys), 42, dtype=np.uint32)
+    for i, c in enumerate(KEYS[table]):
+        col = v[:, i]
+        if types[c] == "INTEGER":
+            h = _fmix(_mix(h, col.astype(np.int32).view(np.uint32)), 4)
+        else:
+            u = col.view(np.uint64)
+            lo = (u & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+            h = _fmix(_mix(_mix(h, lo), (u >> np.uint64(32)).astype(np.uint32)), 8)
+    return h.view(np.int32).astype(np.int64) % shards
+
+
+class ShardRouter:
+    """A DB-API connection over ``shards`` sqlite files of ``table``,
+    one per partition of the sink's route: each statement row goes to
+    the shard of the Spark partition ``repartition(shards, *keys)``
+    assigns its key (``spark_partition``; every table here lists its
+    key columns first, in both upsert and delete parameters). A route
+    that keeps its N partitions gives each writer one shard of its own;
+    when AQE merges partitions, a writer opens every shard its rows
+    belong to. Each shard's slice of a statement commits on its own, so
+    no writer holds one shard's lock while waiting for another's."""
+
+    def __init__(self, directory: str, table: str, shards: int) -> None:
         self._paths = shard_paths(directory, shards)
+        self._table = table
+        self._nkeys = len(KEYS[table])
         self._conns: dict[int, sqlite3.Connection] = {}
         self._init: list[str] = []
 
@@ -110,14 +170,15 @@ class ShardRouter:
         return _RouterCursor(self)
 
     def run(self, sql: str, rows: list) -> None:
+        if not rows:
+            return
         n = len(self._paths)
-        buckets: list[list] = [[] for _ in range(n)]
-        for r in rows:
-            buckets[r[0] % n].append(r)
-        for i, b in enumerate(buckets):
-            if b:
+        shard = spark_partition(self._table, [r[: self._nkeys] for r in rows], n)
+        for i in range(n):
+            idx = (shard == i).nonzero()[0]
+            if len(idx):
                 conn = self._conn(i)
-                conn.executemany(sql, b)
+                conn.executemany(sql, [rows[j] for j in idx])
                 conn.commit()
 
     def commit(self) -> None:
@@ -287,15 +348,14 @@ def read_sqlite(paths: list[str], table: str):
     import pyarrow as pa
 
     cols = TABLES[table]
-    arrays: list[list] = [[] for _ in cols]
+    rows: list[tuple] = []
     for p in paths:
         con = sqlite3.connect(p)
         try:
-            for row in con.execute(f"SELECT {', '.join(c for c, *_ in cols)} FROM {table}"):
-                for i, v in enumerate(row):
-                    arrays[i].append(v)
+            rows += con.execute(f"SELECT {', '.join(c for c, *_ in cols)} FROM {table}").fetchall()
         finally:
             con.close()
+    arrays = list(zip(*rows)) or [()] * len(cols)
     types = {"BIGINT": pa.int64(), "INTEGER": pa.int32(), "DOUBLE": pa.float64(), "VARCHAR": pa.string()}
     return pa.table({c: pa.array(a, type=types[dt]) for (c, dt, _, _), a in zip(cols, arrays)})
 
