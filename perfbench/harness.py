@@ -23,7 +23,9 @@ BENCHMARK_JSON = os.path.join(ROOT, "BENCHMARK.json")
 # everything the benchmark builds or writes lives under the checkout
 BUILD_DIR = os.path.join(ROOT, ".bench_build", "perfbench")
 SETUP_REPEATS = 3
-RSS_INTERVAL_S = 0.2
+# reading a JVM's smaps_rollup takes ~10 ms of kernel time under its
+# memory-map lock, so the sampler stays rare
+RSS_INTERVAL_S = 1.0
 TAIL_BEYOND = 10  # samples a reported tail percentile must have beyond it
 
 

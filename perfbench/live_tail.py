@@ -147,7 +147,7 @@ class Sink:
 
 def generate_inputs(ctx: harness.Context):
     """Only the empty target: the generator process draws its records
-    from the seed when the run starts."""
+    from the seed when the tail starts."""
     target = os.path.join(ctx.work, "target")
     os.makedirs(target)
     tables.create_target(os.path.join(target, "target.db"), ["orders"])
