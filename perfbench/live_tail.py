@@ -96,8 +96,8 @@ def _offset(v) -> dict | None:
 
 class Sink:
     """The ``foreachBatch`` body. Records each batch's start and end and
-    the apply statistics; with tracing on, spans the calls and counts
-    the rows that passed the filter."""
+    the apply statistics; with tracing on, spans the calls and observes
+    how many rows passed the filter."""
 
     def __init__(self, spark, target_dir: str, stats_dir: str, tracer: harness.Tracer) -> None:
         from pyspark.sql import types as T
@@ -112,6 +112,9 @@ class Sink:
         self.root: str | None = None
 
     def __call__(self, batch_df, batch_id: int) -> None:
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         from xxt_cdc_spark.operators.normalize import envelope_to_typed
         from xxt_cdc_spark.sinks.upsert import apply_batch
 
@@ -121,8 +124,10 @@ class Sink:
         rec = {"batch_id": batch_id, "start": start, "traced": tracing}
         with tr.span("streaming:foreach_batch", parent=self.root, batch_id=batch_id):
             if tracing:
-                with tr.span("operators:filter_count"):
-                    rec["passed"] = batch_df.count()
+                # rows that passed the filter, counted by the apply's own
+                # read of the batch: no second action over the source
+                passed = Observation(f"passed_{batch_id}")
+                batch_df = batch_df.observe(passed, F.count(F.lit(1)).alias("rows"))
             typed = envelope_to_typed(batch_df, "orders", self.struct, image="auto").select(
                 "op", "pos_file", "pos_offset", *tables.columns("orders")
             )
@@ -140,6 +145,7 @@ class Sink:
                 rec["apply_s"] = time.perf_counter() - t0
             if sp is not None:
                 rec["span"] = sp["id"]
+                rec["passed"] = passed.get["rows"]
         rec.update(res)
         rec["done"] = time.time()
         self.batches[batch_id] = rec
