@@ -30,6 +30,7 @@ ORDERS_SHARE = 0.4  # of history events; the rest change lineitem
 NEW_KEY_SHARE = 0.2  # keys beyond the snapshot, first seen as inserts
 DUPLICATE_EVERY = 33  # every 33rd position twice, as the repo's change-feed fixture
 MIN_ITERATIONS = 2  # the reported time is a median
+WARMUP_HISTORY_PART = 4  # the warm-up catches up 1/4 of the history
 
 
 # numeric draws per column; ``_SQL`` turns codes into the column values
@@ -238,9 +239,10 @@ class Bootstrap:
             if phase == "catchup":
                 self.collapse_out += res["upserts"] + res["deletes"]
 
-    def iteration(self, shard_dir: str, ckpt: str, stats_dir: str | None) -> dict:
-        """One full bootstrap into fresh shards; returns wall time and
-        the engine's phase stats."""
+    def iteration(self, shard_dir: str, ckpt: str, stats_dir: str | None, last: int | None = None) -> dict:
+        """One bootstrap into fresh shards, catching up to position
+        ``last`` (the end of the history by default); returns wall time
+        and the engine's phase stats."""
         from pyspark.sql import functions as F
 
         from xxt_cdc_spark.engine import CDCEngine
@@ -251,7 +253,7 @@ class Bootstrap:
         spark, inputs, tracer = self.spark, self.inputs, self.tracer
         # the snapshot is taken at position 0; the master has reached the
         # end of the history by the time it completes
-        positions = iter([0, self.meta["last_position"]])
+        positions = iter([0, self.meta["last_position"] if last is None else last])
 
         def snapshot_source():
             with tracer.span("engine:snapshot_source"):
@@ -317,17 +319,22 @@ def generate_inputs(ctx: harness.Context) -> tuple[str, dict]:
     return inputs, generate(inputs, ctx.seed)
 
 
-def measure(ctx: harness.Context, spark, prepared) -> dict:
-    """A warm-up iteration, then the measured ones. Returns what
-    ``finish`` checks and reports."""
+def warm_up(ctx: harness.Context, spark, prepared) -> None:
+    """One iteration that is not measured (JIT, Python workers): the
+    full snapshot and the first part of the history (METRICS.md,
+    "Warm-up")."""
     inputs, meta = prepared
-    # warm-up: one full iteration, not measured (JIT, Python workers);
-    # a first iteration costs ~11 s whatever its size (METRICS.md)
-    off = harness.Tracer(spark, enabled=False)
-    Bootstrap(ctx, spark, inputs, meta, off).iteration(
-        os.path.join(ctx.work, "warm_shards"), os.path.join(ctx.work, "warm_ckpt"), None
+    Bootstrap(ctx, spark, inputs, meta, harness.Tracer(spark, enabled=False)).iteration(
+        os.path.join(ctx.work, "warm_shards"), os.path.join(ctx.work, "warm_ckpt"), None,
+        meta["last_position"] // WARMUP_HISTORY_PART,
     )
     harness.log("bootstrap warm-up done")
+
+
+def measure(ctx: harness.Context, spark, prepared) -> dict:
+    """The measured iterations, after ``warm_up``. Returns what
+    ``finish`` checks and reports."""
+    inputs, meta = prepared
     runs, shard_dirs, apply_failures = [], [], 0
     traced = None
     # trace mode: one untraced iteration, then one traced iteration;

@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 import platform
+import signal
 import sys
 import threading
 import time
@@ -27,6 +28,8 @@ SETUP_REPEATS = 3
 # memory-map lock, so the sampler stays rare
 RSS_INTERVAL_S = 1.0
 TAIL_BEYOND = 10  # samples a reported tail percentile must have beyond it
+STOP_GRACE_S = 30.0  # how long a process may take to exit before it is killed
+REAP_WAIT_S = 2.0  # how long an ended process's parent may take to reap it
 
 
 def cpu_count() -> int:
@@ -110,19 +113,69 @@ def timed_setup(spark, threads: int, prepare) -> tuple[object, list[float], list
 
 
 def stop_session(spark) -> None:
-    """Stop the session and end the JVM (and the Python workers it
-    started), waiting until it has exited."""
+    """Stop the session and end the JVM, waiting until the Python
+    workers it started and then the JVM itself have exited."""
     from pyspark import SparkContext
 
-    spark.stop()
     gateway = SparkContext._gateway
-    if gateway is None or gateway.proc is None:
-        return
-    gateway.shutdown()
-    gateway.proc.stdin.close()  # the JVM exits when its stdin closes
-    gateway.proc.wait(timeout=60)
-    SparkContext._gateway = None
-    SparkContext._jvm = None
+    workers = descendants(gateway.proc.pid)
+    try:
+        spark.stop()
+    finally:
+        # the JVM reaps its workers only while it runs
+        end_processes(workers + descendants(gateway.proc.pid))
+        gateway.shutdown()
+        gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+        end_processes([gateway.proc.pid])
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+
+
+# --- processes -------------------------------------------------------------
+def descendants(pid: int) -> list[int]:
+    """Every live descendant of ``pid``, parents before children."""
+    out, stack = [], [pid]
+    while stack:
+        kids = _children(stack.pop())
+        out.extend(kids)
+        stack.extend(kids)
+    return out
+
+
+def _alive(pid: int) -> bool:
+    """Running, not yet exited (a zombie has exited)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except (FileNotFoundError, ProcessLookupError, IndexError):
+        return False
+
+
+def end_processes(pids: list[int], grace: float = STOP_GRACE_S) -> None:
+    """Wait up to ``grace`` seconds for ``pids`` (parents before
+    children) to exit, then kill the ones still running, children
+    first so that each parent still runs to reap them, and wait until
+    every one of them has gone. This process reaps its own children."""
+    deadline = time.time() + grace
+    while any(_alive(p) for p in pids) and time.time() < deadline:
+        time.sleep(0.05)
+    deadline = time.time() + REAP_WAIT_S
+    for p in reversed(list(dict.fromkeys(pids))):
+        if _alive(p):
+            try:
+                os.kill(p, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        try:
+            os.waitpid(p, 0)  # a child of this process, dead or killed
+        except ChildProcessError:  # another's child: its parent reaps it
+            while os.path.exists(f"/proc/{p}") and time.time() < deadline:
+                time.sleep(0.02)
+
+
+def end_all_children(grace: float = STOP_GRACE_S) -> None:
+    """End every process this one started, directly or not."""
+    end_processes(descendants(os.getpid()), grace)
 
 
 def versions_record(threads: int) -> dict:

@@ -1,22 +1,24 @@
 """Open-loop binlog generator for the live tail of the ``replicate`` workload.
 
-Runs in its own process. It draws every record from ``--seed`` first
-and appends the first ``WARM_EVENTS`` of them to ``binlog.000001`` at
-once, as the warm-up segment the stream drains before the live run; it
-writes that segment's end offset to ``--ready-out``. It then waits for
-the file ``--go`` to appear and fixes the schedule: tick ``k`` is due
-at ``start + k * TICK_MS``, with ``start`` a short lead after the go
+``write_records`` draws every change record from the run's seed ahead of
+the run, in the benchmark's input process. The generator itself runs in
+its own process and only appends those records: first the
+``WARM_EVENTS`` records of the warm-up segment to ``binlog.000001`` at
+once, for the stream to drain before the live run; it writes that
+segment's end offset to ``--ready-out``. It then waits for the file
+``--go`` to appear and fixes the schedule: tick ``k`` is due at
+``start + k * TICK_MS``, with ``start`` a short lead after the go
 signal, and is written to ``--start-out`` at once. Each tick appends
 its records to the current ``binlog.NNNNNN`` file (a new file every
 ``ROTATE_EVERY`` ticks), whatever the reader is doing. A late tick is
 written as soon as possible and its lateness recorded; the schedule
 never shifts.
 
-When it ends it writes one JSON line per tick to ``--ticks``:
+When it ends it writes one JSON line per tick to ``--ticks-out``:
 ``{"tick", "due", "file", "end", "events", "late_ms"}``, where
 ``(file, end)`` is the binlog position just after the tick's records.
 
-Usage: python3 -m perfbench.live_gen --dir D --seed S --ticks N
+Usage: python3 -m perfbench.live_gen --dir D --records FILE --ticks N
        --ready-out FILE --go FILE --start-out FILE --ticks-out FILE
 """
 
@@ -28,12 +30,9 @@ import os
 import sys
 import time
 
-import numpy as np
-
-from perfbench import tables
-
-RATE = 2_500  # events/s: well below the knee on a 4-core machine (METRICS.md)
+RATE = 1_000  # events/s: a batch per trigger interval takes ~0.5 s (METRICS.md)
 TICK_MS = 50
+PER_TICK = RATE * TICK_MS // 1000
 ROTATE_EVERY = 60  # ticks per binlog file (3 s)
 WARM_EVENTS = RATE  # the warm-up segment ahead of the first tick: one second's events
 GTID_SOURCE = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
@@ -47,6 +46,10 @@ EXCLUDE_TABLES = ["temp_.*", ".*_backup"]
 
 def records(seed: int, n: int) -> list[bytes]:
     """``n`` encoded change records (JSON lines) drawn from ``seed``."""
+    # imported here: the generator process only appends drawn records
+    import numpy as np
+
+    from perfbench import tables
     from xxt_cdc_spark.streaming.binlog_source import encode_record
 
     rng = np.random.default_rng(seed)
@@ -94,6 +97,12 @@ def records(seed: int, n: int) -> list[bytes]:
     return out
 
 
+def write_records(path: str, seed: int, n_ticks: int) -> None:
+    """The warm-up segment and ``n_ticks`` ticks of records, to ``path``."""
+    with open(path, "wb") as f:
+        f.write(b"".join(records(seed, WARM_EVENTS + PER_TICK * n_ticks)))
+
+
 LEAD_S = 0.5
 GO_TIMEOUT_S = 120.0
 
@@ -104,9 +113,9 @@ def _publish(path: str, value) -> None:
     os.replace(path + ".tmp", path)
 
 
-def run(directory: str, seed: int, ready_out: str, go: str, start_out: str, n_ticks: int) -> list[dict]:
-    per_tick = RATE * TICK_MS // 1000
-    lines = records(seed, WARM_EVENTS + per_tick * n_ticks)
+def run(directory: str, records_path: str, ready_out: str, go: str, start_out: str, n_ticks: int) -> list[dict]:
+    with open(records_path, "rb") as f:
+        lines = f.read().splitlines(keepends=True)
     os.makedirs(directory, exist_ok=True)
     file_no = 1
     name = f"binlog.{file_no:06d}"
@@ -138,7 +147,7 @@ def run(directory: str, seed: int, ready_out: str, go: str, start_out: str, n_ti
                 file_no += 1
                 name = f"binlog.{file_no:06d}"
                 fh = open(os.path.join(directory, name), "ab")
-            fh.write(b"".join(lines[k * per_tick : (k + 1) * per_tick]))
+            fh.write(b"".join(lines[k * PER_TICK : (k + 1) * PER_TICK]))
             fh.flush()
             ticks.append(
                 {
@@ -146,7 +155,7 @@ def run(directory: str, seed: int, ready_out: str, go: str, start_out: str, n_ti
                     "due": due,
                     "file": name,
                     "end": fh.tell(),
-                    "events": per_tick,
+                    "events": PER_TICK,
                     "late_ms": max(0.0, (time.time() - due) * 1000.0),
                 }
             )
@@ -160,14 +169,14 @@ def run(directory: str, seed: int, ready_out: str, go: str, start_out: str, n_ti
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", required=True)
-    ap.add_argument("--seed", type=int, required=True)
+    ap.add_argument("--records", required=True)
     ap.add_argument("--ready-out", required=True)
     ap.add_argument("--go", required=True)
     ap.add_argument("--start-out", required=True)
     ap.add_argument("--ticks", type=int, required=True)
     ap.add_argument("--ticks-out", required=True)
     a = ap.parse_args(argv)
-    ticks = run(a.dir, a.seed, a.ready_out, a.go, a.start_out, a.ticks)
+    ticks = run(a.dir, a.records, a.ready_out, a.go, a.start_out, a.ticks)
     with open(a.ticks_out, "w") as f:
         for t in ticks:
             f.write(json.dumps(t) + "\n")

@@ -2,8 +2,9 @@
 seeded single-row changes to rotated ``xxt_binlog`` files at a fixed
 rate in fixed ticks; about 10 % of them target tables the
 ``TableFilter`` excludes. The stream runs ``read_binlog_stream`` →
-``CDCStreamPipeline`` (``TableFilter`` predicate, back-to-back
-micro-batches) → ``foreachBatch``: ``envelope_to_typed(image="auto")`` →
+``CDCStreamPipeline`` (``TableFilter`` predicate, micro-batches on a
+1 s processing-time trigger) → ``foreachBatch``:
+``envelope_to_typed(image="auto")`` →
 ``apply_batch(num_partitions=None, driver_apply=True, collapse=True)``
 into sqlite.
 
@@ -23,13 +24,15 @@ import subprocess
 import sys
 import time
 
-from perfbench import harness, tables
+from perfbench import harness, live_gen, tables
 from perfbench.live_gen import EXCLUDE_TABLES, INCLUDE_TABLES, RATE, TICK_MS, WARM_EVENTS
 
-# each batch starts when the previous one ends: with batches longer than
-# a processingTime interval, Spark waits for the next interval boundary,
-# which at 250 ms made the run's latency flip between ~0.7 and ~1.6 s
-TRIGGER = "0 seconds"
+# a batch here takes ~0.5 s, so each starts on its own 1 s boundary.
+# Spark starts a batch on the first interval boundary after the previous
+# one ends, which at 250 ms made the run's latency flip between ~0.7 and
+# ~1.6 s; back-to-back batches (0 s) let a slow batch enlarge the next
+# one, and read a run-to-run spread of 0.15-0.49 (METRICS.md)
+TRIGGER = "1 second"
 WARMUP_S = 1.0  # ticks due in the first WARMUP_S seconds are not measured
 DRAIN_TIMEOUT_S = 30.0
 GEN_READY_TIMEOUT_S = 30.0
@@ -151,13 +154,18 @@ class Sink:
         self.batches[batch_id] = rec
 
 
+def _n_ticks(ctx: harness.Context) -> int:
+    return int((WARMUP_S + ctx.seconds) * 1000 / TICK_MS)
+
+
 def generate_inputs(ctx: harness.Context):
-    """Only the empty target: the generator process draws its records
-    from the seed when the tail starts."""
+    """The empty target and the generator's records, drawn from the seed."""
     target = os.path.join(ctx.work, "target")
     os.makedirs(target)
     tables.create_target(os.path.join(target, "target.db"), ["orders"])
-    return {"target": target, "binlog": os.path.join(ctx.work, "binlog")}
+    records = os.path.join(ctx.work, "records.jsonl")
+    live_gen.write_records(records, ctx.seed, _n_ticks(ctx))
+    return {"target": target, "binlog": os.path.join(ctx.work, "binlog"), "records": records}
 
 
 def _wait_published(path: str, gen: subprocess.Popen) -> float:
@@ -184,49 +192,64 @@ def _wait_applied(query, pos: tuple[int, int], timeout: float) -> bool:
     return False
 
 
-def measure(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> dict:
-    """Start the generator and the stream, drain the warm-up segment,
-    run the schedule and drain it. Returns what ``finish`` checks and
-    reports."""
-    from xxt_cdc_spark.obs.metrics import snapshot_from_query
-    from xxt_cdc_spark.operators.table_filter import TableFilter
-    from xxt_cdc_spark.streaming.binlog_source import read_binlog_stream
-    from xxt_cdc_spark.streaming.pipeline import CDCStreamPipeline
+class Tail:
+    """The tail's generator and stream. Building it starts both, and the
+    stream drains the generator's warm-up segment while the caller goes
+    on; ``measure`` then runs the schedule. ``close`` ends the generator
+    on every way out."""
 
-    n_ticks = int((WARMUP_S + ctx.seconds) * 1000 / TICK_MS)
-    binlog = prepared["binlog"]
-    ticks_out = os.path.join(ctx.work, "ticks.jsonl")
-    ready_out = os.path.join(ctx.work, "ready.txt")
-    go = os.path.join(ctx.work, "go")
-    start_out = os.path.join(ctx.work, "start.txt")
-    gen = subprocess.Popen(
-        [
-            sys.executable, "-m", "perfbench.live_gen",
-            "--dir", binlog, "--seed", str(ctx.seed), "--ticks", str(n_ticks), "--ready-out", ready_out,
-            "--go", go, "--start-out", start_out, "--ticks-out", ticks_out,
-        ],
-        cwd=harness.ROOT,
-    )
-    rss.skip.add(gen.pid)
-    try:
-        warm_end = position("binlog.000001", _wait_published(ready_out, gen))
-        tracer = harness.Tracer(spark, enabled=ctx.trace)
-        sink = Sink(spark, prepared["target"], os.path.join(ctx.work, "connstats"), tracer)
-        query = CDCStreamPipeline(
-            spark=spark,
-            source=read_binlog_stream(spark, binlog),
-            apply_fn=sink,
-            checkpoint_dir=os.path.join(ctx.work, "ckpt"),
-            table_filter=TableFilter(include_tables=INCLUDE_TABLES, exclude_tables=EXCLUDE_TABLES),
-            trigger_interval=TRIGGER,
-        ).start()
-        # warm-up: the stream drains the generator's warm-up segment
-        # (Python data source workers, JIT, sqlite) before the first tick
-        if not _wait_applied(query, warm_end, DRAIN_TIMEOUT_S):
+    def __init__(self, ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> None:
+        from xxt_cdc_spark.operators.table_filter import TableFilter
+        from xxt_cdc_spark.streaming.binlog_source import read_binlog_stream
+        from xxt_cdc_spark.streaming.pipeline import CDCStreamPipeline
+
+        self.ctx, self.prepared = ctx, prepared
+        self.ticks_out = os.path.join(ctx.work, "ticks.jsonl")
+        self.go = os.path.join(ctx.work, "go")
+        self.start_out = os.path.join(ctx.work, "start.txt")
+        ready_out = os.path.join(ctx.work, "ready.txt")
+        binlog = prepared["binlog"]
+        self.gen = subprocess.Popen(
+            [
+                sys.executable, "-m", "perfbench.live_gen",
+                "--dir", binlog, "--records", prepared["records"], "--ticks", str(_n_ticks(ctx)),
+                "--ready-out", ready_out, "--go", self.go, "--start-out", self.start_out,
+                "--ticks-out", self.ticks_out,
+            ],
+            cwd=harness.ROOT,
+        )
+        rss.skip.add(self.gen.pid)
+        try:
+            self.warm_end = position("binlog.000001", _wait_published(ready_out, self.gen))
+            self.tracer = harness.Tracer(spark, enabled=ctx.trace)
+            self.sink = Sink(spark, prepared["target"], os.path.join(ctx.work, "connstats"), self.tracer)
+            self.query = CDCStreamPipeline(
+                spark=spark,
+                source=read_binlog_stream(spark, binlog),
+                apply_fn=self.sink,
+                checkpoint_dir=os.path.join(ctx.work, "ckpt"),
+                table_filter=TableFilter(include_tables=INCLUDE_TABLES, exclude_tables=EXCLUDE_TABLES),
+                trigger_interval=TRIGGER,
+            ).start()
+        except BaseException:
+            self.close()
+            raise
+
+    def wait_warm(self) -> None:
+        """Wait until the stream has drained the warm-up segment (Python
+        data source workers, JIT, sqlite)."""
+        if not _wait_applied(self.query, self.warm_end, DRAIN_TIMEOUT_S):
             raise RuntimeError("the stream did not drain the warm-up segment")
         harness.log("tail warm-up done")
-        open(go, "w").close()
-        start = _wait_published(start_out, gen)
+
+    def measure(self) -> dict:
+        """Run the schedule and drain it. Returns what ``finish`` checks
+        and reports."""
+        from xxt_cdc_spark.obs.metrics import snapshot_from_query
+
+        ctx, gen, sink, tracer = self.ctx, self.gen, self.sink, self.tracer
+        open(self.go, "w").close()
+        start = _wait_published(self.start_out, gen)
         budget = start - time.time() + WARMUP_S + ctx.seconds + 30
         if ctx.trace:
             # first half untraced, second half traced: the difference is
@@ -239,19 +262,20 @@ def measure(ctx: harness.Context, spark, prepared, rss: harness.RssSampler) -> d
                 gen.wait(timeout=budget)
         else:
             gen.wait(timeout=budget)
-    finally:
-        if gen.poll() is None:
-            gen.kill()
-            gen.wait()
-    with open(ticks_out) as f:
-        ticks = [json.loads(line) for line in f]
-    # drain: wait until the stream has applied the last tick
-    _wait_applied(query, position(ticks[-1]["file"], ticks[-1]["end"]), DRAIN_TIMEOUT_S)
-    query.stop()
-    harness.log("tail measured")
-    return {"prepared": prepared, "ticks": ticks, "start": start, "sink": sink, "tracer": tracer,
-            "progress": _progress(query),
-            "obs_p50": snapshot_from_query(query).latency_percentiles()["p50_ms"]}
+        with open(self.ticks_out) as f:
+            ticks = [json.loads(line) for line in f]
+        # drain: wait until the stream has applied the last tick
+        _wait_applied(self.query, position(ticks[-1]["file"], ticks[-1]["end"]), DRAIN_TIMEOUT_S)
+        self.query.stop()
+        harness.log("tail measured")
+        return {"prepared": self.prepared, "ticks": ticks, "start": start, "sink": sink, "tracer": tracer,
+                "progress": _progress(self.query),
+                "obs_p50": snapshot_from_query(self.query).latency_percentiles()["p50_ms"]}
+
+    def close(self) -> None:
+        if self.gen.poll() is None:
+            self.gen.kill()
+            self.gen.wait()
 
 
 def finish(ctx: harness.Context, m: dict) -> harness.Outcome:
@@ -263,7 +287,8 @@ def finish(ctx: harness.Context, m: dict) -> harness.Outcome:
     progress = m["progress"]
     for p in progress:
         bid = p["batchId"]
-        if bid not in sink.batches or not p.get("sources"):
+        # an idle trigger (no new data) reports progress with no input rows
+        if bid not in sink.batches or not p.get("sources") or not p["numInputRows"]:
             continue
         end = _offset(p["sources"][0]["endOffset"])
         batches.append({**sink.batches[bid], "end": end, "progress": p})

@@ -15,14 +15,15 @@ sample counts, the correctness detail and the run's sizing.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
-import multiprocessing
 import os
+import pickle
 import shutil
 import statistics
+import subprocess
 import sys
 import time
-from concurrent.futures import ProcessPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("replicate", "curation_batch")
@@ -33,8 +34,11 @@ DEADLINE_S = 170
 def _watchdog(seconds: float) -> "threading.Timer":
     import threading
 
+    from perfbench import harness
+
     def fire():
         print(f"perfbench: run exceeded {seconds:.0f} s, aborting", file=sys.stderr, flush=True)
+        harness.end_all_children(grace=0)
         os._exit(3)
 
     t = threading.Timer(seconds, fire)
@@ -61,12 +65,10 @@ def main(argv: list[str] | None = None) -> int:
     import xxt_cdc_spark  # noqa: F401  (fails fast without the program)
 
     from perfbench import harness
+    from perfbench.inputs import workload_module
 
     harness.log(f"{args.workload} seed {args.seed}")
-    if args.workload == "replicate":
-        from perfbench import replicate as wl
-    else:
-        from perfbench import curation as wl
+    wl = workload_module(args.workload)
 
     threads = harness.cpu_count()
     session_threads = wl.threads_for(threads) if hasattr(wl, "threads_for") else threads
@@ -82,31 +84,45 @@ def main(argv: list[str] | None = None) -> int:
         spark_threads=session_threads,
         work=work,
     )
-    # the benchmark's own input generator runs in a child process while
-    # the session starts, so neither its time nor its memory lands in
-    # the measured process
+    # the benchmark's own input generator (perfbench/inputs.py) runs in a
+    # child process while the session starts, so neither its time nor
+    # its memory lands in the measured process
     dog = _watchdog(DEADLINE_S)
     rss = harness.RssSampler()
     spark = None
     try:
-        with ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("spawn")) as pool:
-            t0 = time.perf_counter()
-            pending = pool.submit(wl.generate_inputs, ctx)
+        t0 = time.perf_counter()
+        made = os.path.join(work, "inputs.pickle")
+        gen = subprocess.Popen(
+            [sys.executable, "-m", "perfbench.inputs", json.dumps(dataclasses.asdict(ctx)), made],
+            cwd=ROOT,
+        )
+        try:
             spark = harness.get_session(session_threads)
             spark.range(1).count()
             cold_start = time.perf_counter() - t0
-            prepared = pending.result()
-            gen_s = time.perf_counter() - t0
+            if gen.wait() != 0:
+                raise RuntimeError(f"input generator failed (exit code {gen.returncode})")
+        finally:
+            if gen.poll() is None:
+                gen.kill()
+                gen.wait()
+        gen_s = time.perf_counter() - t0
+        with open(made, "rb") as f:
+            prepared = pickle.load(f)
         harness.log(f"session {cold_start:.1f} s, inputs ready after {gen_s:.1f} s")
         rss.start()
         spark, setup, session_starts = harness.timed_setup(spark, session_threads, wl.prepare(prepared))
         harness.log(f"setup {sum(setup):.1f} s")
         out = wl.run(ctx, spark, prepared, rss)
     finally:
-        if spark is not None:
-            harness.stop_session(spark)
-        peak_mb = rss.stop()
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            if spark is not None:
+                harness.stop_session(spark)
+        finally:
+            harness.end_all_children()
+            peak_mb = rss.stop()
+            shutil.rmtree(work, ignore_errors=True)
     dog.cancel()
     harness.log("stopped")
 
